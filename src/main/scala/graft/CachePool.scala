@@ -30,7 +30,8 @@ object CachePool {
     * (bpeTrain's merge rounds, kCorePeel's peel rounds): every
     * `planTruncateEvery`-th round rebuilds the frame as an eager
     * localCheckpoint so plan depth stays bounded whatever the round
-    * budget. The number comes from the r17 BpeBatchProbe measurement —
+    * budget. The number comes from the r17 distributed-BPE measurement
+    * (COVERAGE.md, batched-exact BPE row) —
     * a ~50-deep nested-cache chain OOM'd an 8g driver building an
     * execution-event plan string — with ~6x headroom; ONE constant so
     * a future retune moves every iterative loop together. */

@@ -349,8 +349,8 @@ object SparkEntry {
     * near-dups collide in the same bands regardless of what else was
     * filtered out.
     *
-    * Stage attribution ([[graft.tools.CurateProbe]], sf0.1 steady
-    * state): admit 1.53 s / pairs 1.04 s / components 0.06 s / keep
+    * Stage attribution (r14, recorded in COVERAGE.md's x14_curate
+    * row; sf0.1 steady state): admit 1.53 s / pairs 1.04 s / components 0.06 s / keep
     * 0.13 s — each stage AT or BELOW its standalone registry sibling
     * (t11 1.9 s, d6 1.3 s; comps+keep ride the cached pairs), so the
     * ~3.5 s headline is the honest sum of a four-stage composition,
@@ -4354,23 +4354,12 @@ object SparkEntry {
     * via exact integer power sums: fano = (D·Q − S²)/(D·S) — exact
     * HUGEINT-class numerator and denominator under ONE division, and
     * mean = S/D a second; nothing else floats. Single map-side-
-    * combined daily aggregate, |types|-row tail. */
-  private val e26Burstiness = (s: SparkSession, d: String) => {
-    val dec = "decimal(38,0)"
-    Tables.events(s, d)
-      .select(col("event_type"),
-        expr("unix_micros(ts) div 86400000000L").as("_day"))
-      .groupBy(col("event_type"), col("_day")).agg(count(lit(1)).as("_c"))
-      .groupBy(col("event_type"))
-      .agg(count(lit(1)).as("n_days"), sum(col("_c")).as("_s"),
-        sum(col("_c").cast(dec) * col("_c")).cast(dec).as("_q"))
-      .select(col("event_type"), col("n_days"),
-        (col("_s").cast("double") / col("n_days").cast("double")).as("mean_daily"),
-        ((col("n_days").cast(dec) * col("_q") -
-          col("_s").cast(dec) * col("_s")).cast("double") /
-          (col("n_days").cast(dec) * col("_s")).cast("double")).as("fano"))
-      .orderBy(col("event_type"))
-  }
+    * combined daily aggregate, |types|-row tail. The DAG is the
+    * streaming twin's daily-cell partial and read-back derivation,
+    * defined once in [[graft.streaming.StreamingBurstiness]]. */
+  private val e26Burstiness = (s: SparkSession, d: String) =>
+    graft.streaming.StreamingBurstiness.fano(
+      graft.streaming.StreamingBurstiness.partial(Tables.events(s, d)))
 
   /** Empirical-Bayes shrunk quality rate per source (the
     * rank-small-sources-fairly primitive: a 3-doc source with 3 long

@@ -685,8 +685,8 @@ object Dedup {
     * candidate recall only.
     *
     * Why this does NOT ride d24's rarest-first prefix discipline
-    * (r12 verdict item 6, audited with graft.tools.ContainmentProbe —
-    * steady-state split at sf0.1: staging 0.6 s, dfreq 0.5 s, pair
+    * (r12 verdict item 6; audited steady-state split at sf0.1, see
+    * COVERAGE.md's d21_containment rows: staging 0.6 s, dfreq 0.5 s, pair
     * join+count 1.5 s over 2.26 M distinct pairs, bound filter 0.3 s
     * → 512, recount 0.8 s): containment DOES admit a prefix bound
     * (Chaudhuri et al. 2006 — a qualifying pair must intersect a's

@@ -939,8 +939,9 @@ object Similarity {
     * component of every vector, so the codewords spend their
     * m·log₂(ksub) bits on the within-list spread.
     *
-    * MEASURED operating points (bench + ResidualRecallProbe, identical
-    * index bytes to [[ivfTopKPq]]: list id + m codes either way):
+    * MEASURED operating points (bench `pq_res_*` keys + a synthetic
+    * probe whose figures are recorded below; identical index bytes to
+    * [[ivfTopKPq]]: list id + m codes either way):
     *  - CLUSTERED data (the realistic case, and §III-C's home turf):
     *    distortion drops hard — mean cosine(v, v̂) 0.78 → 0.97 on the
     *    bench clustered fixture at nlist = N/16 (synthetic probe:

@@ -1078,9 +1078,10 @@ object TextAnalysis {
     *       own step) but ends the batch. The existing-symbol registry
     *       is driver-maintained: one bounded job at loop start (the
     *       corpus alphabet + marker — code-point-bounded) plus each
-    *       learned output. Measured (BpeBatchProbe, the vocabCap
-    *       pin's morphology corpus: Zipf(α≈1), ~1M token instances /
-    *       20k types, forced distributed, steady-state run 2): 50
+    *       learned output. Measured (r17, COVERAGE.md's batched-exact
+    *       BPE row; the vocabCap pin's morphology corpus: Zipf(α≈1),
+    *       ~1M token instances / 20k types, forced distributed,
+    *       steady-state run 2): 50
     *       merges in 25 rounds (avg batch 2.00), 18.7 s vs 26.6 s at
     *       probe=1; 200 merges in 77 rounds (avg batch 2.60 —
     *       batches WIDEN as merges diversify the symbol space),
@@ -1206,7 +1207,7 @@ object TextAnalysis {
             Row(row.getLong(0), s)
           }
         }(Encoders.row(vocabSchema)).toDF()
-        // lineage truncation (r17, found by BpeBatchProbe): each round
+        // lineage truncation (r17, COVERAGE.md BPE row): each round
         // nests the prior round's cached plan inside the new round's
         // InMemoryRelation, and the per-action execution-event plan
         // string walks every nested AQE level — a 50-round run OOM'd
@@ -1220,8 +1221,8 @@ object TextAnalysis {
         // captures the checkpoint's materialized RDD for DETERMINISTIC
         // release at the pipeline boundary (DataFrame.unpersist cannot
         // reach checkpoint blocks) and keeps one pool registration per
-        // round so the round count stays observable (BpeBatchProbe,
-        // the round-count spec).
+        // round so the round count stays observable (the round-count
+        // spec).
         roundsSinceTruncate += 1
         vocab =
           if (roundsSinceTruncate >= truncateEvery) {

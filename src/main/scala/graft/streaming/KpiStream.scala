@@ -2,8 +2,8 @@ package graft.streaming
 
 import graft.airline.AirlineKpis
 import graft.sources.Tables
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** The streaming KPI pipeline: ONE source scan, ONE query, fan-out to all
   * KPI tables inside a single `foreachBatch` — restructuring the
@@ -28,38 +28,26 @@ object KpiStream {
 
   /** Start the single fan-out query over an airline CSV segment stream.
     * `availableNow = true` drains all existing files then stops —
-    * the test/replay trigger; false = continuous micro-batches. */
+    * the test/replay trigger; false = live micro-batches on the 1 s
+    * processing-time trigger (the only live caller of [[StreamDriver]]). */
   def start(
       spark: SparkSession,
       inputGlob: String,
       checkpointDir: String,
       store: ParquetKpiStore,
       availableNow: Boolean = true,
-      maxFilesPerTrigger: Option[Int] = None): StreamingQuery = {
-    val stream = Tables.airlineCsvStream(spark, inputGlob, maxFilesPerTrigger)
-    val writer = stream.writeStream
-      .queryName("graft_kpi_fanout")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
-        batch.persist()
-        try AirlineKpis.all.foreach { case (table, transform, keys) =>
-          store.merge(spark, table, keys, transform(batch), batchId)
-        } finally batch.unpersist()
-        ()
-      }
-    (if (availableNow) writer.trigger(Trigger.AvailableNow())
-     else writer.trigger(Trigger.ProcessingTime("1 second"))).start()
-  }
+      maxFilesPerTrigger: Option[Int] = None): StreamingQuery =
+    StreamDriver.start("graft_kpi_fanout",
+      Tables.airlineCsvStream(spark, inputGlob, maxFilesPerTrigger), checkpointDir,
+      availableNow = availableNow)(fanOut(store.merge(spark, _, _, _, _)))
 
   /** Drain-and-stop convenience for tests/replays. */
   def runToCompletion(
       spark: SparkSession,
       inputGlob: String,
       checkpointDir: String,
-      store: ParquetKpiStore): Unit = {
-    val q = start(spark, inputGlob, checkpointDir, store, availableNow = true)
-    q.awaitTermination()
-  }
+      store: ParquetKpiStore): Unit =
+    start(spark, inputGlob, checkpointDir, store).awaitTermination()
 
   /** Same single-scan fan-out, delivered to a live JDBC database — the
     * reference's actual topology (stream → DB upsert), with additive
@@ -69,20 +57,19 @@ object KpiStream {
       spark: SparkSession,
       inputGlob: String,
       checkpointDir: String,
-      store: JdbcKpiStore,
-      availableNow: Boolean = true): StreamingQuery = {
-    val stream = Tables.airlineCsvStream(spark, inputGlob)
-    val writer = stream.writeStream
-      .queryName("graft_kpi_fanout_jdbc")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
-        batch.persist()
-        try AirlineKpis.all.foreach { case (table, transform, keys) =>
-          store.merge(table, keys, transform(batch), batchId)
-        } finally batch.unpersist()
-        ()
-      }
-    (if (availableNow) writer.trigger(Trigger.AvailableNow())
-     else writer.trigger(Trigger.ProcessingTime("1 second"))).start()
+      store: JdbcKpiStore): StreamingQuery =
+    StreamDriver.start("graft_kpi_fanout_jdbc",
+      Tables.airlineCsvStream(spark, inputGlob), checkpointDir)(
+      fanOut(store.merge(_, _, _, _)))
+
+  /** The fan-out body both sinks share: the micro-batch is persisted
+    * once and every KPI's per-batch components go to the store's
+    * `merge(table, keys, components, batchId)`. */
+  private def fanOut(merge: (String, Seq[String], DataFrame, Long) => Unit)(
+      batch: DataFrame, batchId: Long): Unit = {
+    batch.persist()
+    try AirlineKpis.all.foreach { case (table, transform, keys) =>
+      merge(table, keys, transform(batch), batchId)
+    } finally batch.unpersist()
   }
 }

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Streaming burstiness — batch `e26`'s ingest-time twin: the
   * per-type Fano factor (index of dispersion of daily counts)
@@ -25,9 +25,11 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 object StreamingBurstiness {
 
   private[streaming] val table = "burstiness_daily"
+  private val schema = "day_idx BIGINT, event_type STRING, n_events BIGINT"
 
-  /** Additive partial of one frame — also the state schema. */
-  private def partial(df: DataFrame): DataFrame =
+  /** Additive partial of one frame — also the state schema. Batch
+    * `e26_burstiness` runs it over the whole events table. */
+  private[graft] def partial(df: DataFrame): DataFrame =
     df.select(expr("unix_micros(ts) div 86400000000L").as("day_idx"),
         col("event_type"))
       .groupBy(col("day_idx"), col("event_type"))
@@ -44,40 +46,32 @@ object StreamingBurstiness {
       spark: SparkSession,
       stream: DataFrame,
       store: ParquetKpiStore,
-      checkpointDir: String,
-      availableNow: Boolean = true): StreamingQuery = {
-    val w = stream.writeStream
-      .queryName("graft_stream_burstiness")
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
+      checkpointDir: String): StreamingQuery =
+    StreamDriver.start("graft_stream_burstiness", stream, checkpointDir) {
+      (batch: DataFrame, id: Long) =>
         store.mergeWith(batch.sparkSession, table, partial(batch), id)(combine)
-      }
-    (if (availableNow) w.trigger(Trigger.AvailableNow())
-     else w.trigger(Trigger.ProcessingTime("1 second"))).start()
-  }
+    }
 
   /** The per-type dispersion panel in the batch `e26_burstiness`
     * shape; a never-written store reads as an empty panel with the
     * full schema. */
   def fanoTable(spark: SparkSession, store: ParquetKpiStore): DataFrame =
-    store.read(spark, table) match {
-      case Some(df) =>
-        val dec = "decimal(38,0)"
-        df.groupBy(col("event_type"))
-          .agg(count(lit(1)).as("n_days"), sum(col("n_events")).as("_s"),
-            sum(col("n_events").cast(dec) * col("n_events")).cast(dec).as("_q"))
-          .select(col("event_type"), col("n_days"),
-            (col("_s").cast("double") / col("n_days").cast("double"))
-              .as("mean_daily"),
-            ((col("n_days").cast(dec) * col("_q") -
-              col("_s").cast(dec) * col("_s")).cast("double") /
-              (col("n_days").cast(dec) * col("_s")).cast("double")).as("fano"))
-          .orderBy(col("event_type"))
-      case None =>
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          org.apache.spark.sql.types.StructType.fromDDL(
-            "event_type STRING, n_days BIGINT, mean_daily DOUBLE, fano DOUBLE"))
-    }
+    fano(store.read(spark, table, schema))
+
+  /** Per-type (n_days, mean_daily, fano) of a daily-cell panel
+    * ([[partial]]'s shape) — the one derivation batch e26 and the
+    * read-back share. */
+  private[graft] def fano(cells: DataFrame): DataFrame = {
+    val dec = "decimal(38,0)"
+    cells.groupBy(col("event_type"))
+      .agg(count(lit(1)).as("n_days"), sum(col("n_events")).as("_s"),
+        sum(col("n_events").cast(dec) * col("n_events")).cast(dec).as("_q"))
+      .select(col("event_type"), col("n_days"),
+        (col("_s").cast("double") / col("n_days").cast("double"))
+          .as("mean_daily"),
+        ((col("n_days").cast(dec) * col("_q") -
+          col("_s").cast(dec) * col("_s")).cast("double") /
+          (col("n_days").cast(dec) * col("_s")).cast("double")).as("fano"))
+      .orderBy(col("event_type"))
+  }
 }

@@ -5,7 +5,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Streaming curation — the x14 composition (admission gate → LSH
   * near-dup cut → per-source quota) run INCREMENTALLY in one
@@ -162,16 +162,8 @@ class StreamingCuration(
   def start(
       spark: SparkSession,
       docStream: DataFrame,
-      checkpointDir: String,
-      availableNow: Boolean = true): StreamingQuery = {
-    val w = docStream.writeStream
-      .queryName("graft_stream_curation")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(spark, batch, batchId)
-        ()
-      }
-    (if (availableNow) w.trigger(Trigger.AvailableNow())
-     else w.trigger(Trigger.ProcessingTime("1 second"))).start()
-  }
+      checkpointDir: String): StreamingQuery =
+    StreamDriver.start("graft_stream_curation", docStream, checkpointDir) {
+      (batch: DataFrame, batchId: Long) => processBatch(spark, batch, batchId)
+    }
 }

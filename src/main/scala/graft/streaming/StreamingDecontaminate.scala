@@ -3,7 +3,7 @@ package graft.streaming
 import graft.operators.Dedup
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Streaming decontamination: every arriving micro-batch of documents is
   * checked against a STATIC eval/benchmark set before it is admitted to
@@ -57,18 +57,11 @@ class StreamingDecontaminate(
       spark: SparkSession,
       evalSet: DataFrame,
       docStream: DataFrame,
-      checkpointDir: String,
-      availableNow: Boolean = true): StreamingQuery = {
+      checkpointDir: String): StreamingQuery = {
     val cachedEval = evalSet.persist()
-    val w = docStream.writeStream
-      .queryName("graft_stream_decontaminate")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(spark, cachedEval, batch, batchId)
-        ()
-      }
-    val query = (if (availableNow) w.trigger(Trigger.AvailableNow())
-     else w.trigger(Trigger.ProcessingTime("1 second"))).start()
+    val query = StreamDriver.start("graft_stream_decontaminate", docStream, checkpointDir) {
+      (batch: DataFrame, batchId: Long) => processBatch(spark, cachedEval, batch, batchId)
+    }
     // lifecycle: the eval cache lives exactly as long as the query
     val release = new org.apache.spark.sql.streaming.StreamingQueryListener {
       import org.apache.spark.sql.streaming.StreamingQueryListener._

@@ -4,7 +4,7 @@ import graft.operators.{Dedup, TextAnalysis}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Cross-batch streaming near-duplicate detection: each micro-batch of
   * documents is checked against the ACCUMULATED corpus via the banded
@@ -266,18 +266,10 @@ class StreamingLshDedup(
   def start(
       spark: SparkSession,
       docStream: DataFrame,
-      checkpointDir: String,
-      availableNow: Boolean = true): StreamingQuery = {
-    val w = docStream.writeStream
-      .queryName("graft_stream_dedup")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(spark, batch, batchId)
-        ()
-      }
-    (if (availableNow) w.trigger(Trigger.AvailableNow())
-     else w.trigger(Trigger.ProcessingTime("1 second"))).start()
-  }
+      checkpointDir: String): StreamingQuery =
+    StreamDriver.start("graft_stream_dedup", docStream, checkpointDir) {
+      (batch: DataFrame, batchId: Long) => processBatch(spark, batch, batchId)
+    }
 }
 
 object StreamingLshDedup {

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.operators.Evaluation
 
@@ -42,8 +42,7 @@ object StreamingDrift {
       valueCol: String,
       store: ParquetKpiStore,
       checkpointDir: String,
-      bins: Int = 10,
-      availableNow: Boolean = true): StreamingQuery = {
+      bins: Int = 10): StreamingQuery = {
     require(bins >= 2, s"bins must be >= 2, got $bins")
     val v = col(valueCol)
     val bounds: Seq[Double] = ref
@@ -55,18 +54,13 @@ object StreamingDrift {
       ref.select(Evaluation.psiBinOf(v, boundsCol).as("bin"))
         .groupBy(col("bin")).agg(count(lit(1)).as("n")),
       batchId = 0L)
-    val w = stream.select(v.as(valueCol)).writeStream
-      .queryName("graft_stream_drift")
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
+    StreamDriver.start("graft_stream_drift", stream.select(v.as(valueCol)), checkpointDir) {
+      (batch: DataFrame, id: Long) =>
         store.merge(batch.sparkSession, curTable, Seq("bin"),
           batch.select(Evaluation.psiBinOf(col(valueCol), boundsCol).as("bin"))
             .groupBy(col("bin")).agg(count(lit(1)).as("n")),
           id)
-      }
-    (if (availableNow) w.trigger(Trigger.AvailableNow())
-     else w.trigger(Trigger.ProcessingTime("1 second"))).start()
+    }
   }
 
   /** The drift report over everything that has arrived: the complete
@@ -78,10 +72,7 @@ object StreamingDrift {
       bins: Int = 10,
       quantization: Int = 65536): DataFrame = {
     def counts(table: String, out: String): DataFrame =
-      store.read(spark, table)
-        .map(_.select(col("bin"), col("n").as(out)))
-        .getOrElse(spark.range(0).select(
-          col("id").cast("int").as("bin"), col("id").as(out)))
+      store.read(spark, table, "bin INT, n BIGINT").select(col("bin"), col("n").as(out))
     val spine = spark.range(bins).select(col("id").cast("int").as("bin"))
     val grid = spine
       .join(counts(refTable, "_nr"), Seq("bin"), "left")

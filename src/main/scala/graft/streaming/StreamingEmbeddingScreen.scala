@@ -5,7 +5,7 @@ import graft.operators.Similarity
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryListener, Trigger}
+import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryListener}
 
 /** Streaming embedding screen — the embedding analogue of
   * [[StreamingDecontaminate]]: every arriving micro-batch of vectors is
@@ -78,8 +78,7 @@ class StreamingEmbeddingScreen(
       vecStream: DataFrame,
       checkpointDir: String,
       idCol: String = "vec_id",
-      vecCol: String = "embedding",
-      availableNow: Boolean = true): StreamingQuery = {
+      vecCol: String = "embedding"): StreamingQuery = {
     // one-time index build: centroids collected ONCE, reference side
     // assigned and persisted — every batch reuses both
     val cents = Similarity.collectCentroids(
@@ -87,15 +86,10 @@ class StreamingEmbeddingScreen(
     val refIndex = Similarity.ivfAssignCollected(refSet, cents, idCol, vecCol)
       .select(col(idCol).as("ref_id"), col(vecCol).as("_rv"), col("list_id"))
       .persist()
-    val w = vecStream.writeStream
-      .queryName("graft_stream_embedding_screen")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+    val query = StreamDriver.start("graft_stream_embedding_screen", vecStream, checkpointDir) {
+      (batch: DataFrame, batchId: Long) =>
         processBatch(spark, cents, refIndex, batch, batchId, idCol, vecCol)
-        ()
-      }
-    val query = (if (availableNow) w.trigger(Trigger.AvailableNow())
-     else w.trigger(Trigger.ProcessingTime("1 second"))).start()
+    }
     // lifecycle: the index cache lives exactly as long as the query — a
     // session screening many streams must not accumulate dead ref frames
     val release = new StreamingQueryListener {

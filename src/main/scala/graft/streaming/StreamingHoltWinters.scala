@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 
 /** Streaming twin of batch additive Holt–Winters (`e28` —
   * SparkEntry.e28HoltWinters): the per-type seasonal forecast
@@ -151,6 +151,8 @@ object StreamingHoltWinters {
   private[streaming] val group = "holt_winters"
   private[streaming] val table = "holt_winters_type"
   private val dropsTable = "holt_winters_drops"
+  private val schema = "event_type STRING, n_days BIGINT, level DOUBLE, trend DOUBLE, " +
+    "seasonal_next DOUBLE, forecast_1 DOUBLE"
 
   /** One GROUP commit for both tables (round-11 ADVICE): the previous
     * two per-table commits (mergeReplace, then merge) could expose a
@@ -165,7 +167,6 @@ object StreamingHoltWinters {
   private def applyBatch(store: ParquetKpiStore)(
       batch: Dataset[HwRow], batchId: Long): Unit = {
     val spark = batch.sparkSession
-    if (batchId <= store.appliedGroupBatch(spark, group)) return // replayed
     val staged = batch.persist()
     try {
       val forecastUpd = staged.filter(col("drops") === 0L)
@@ -199,27 +200,15 @@ object StreamingHoltWinters {
       events: DataFrame,
       store: ParquetKpiStore,
       checkpointDir: String,
-      latenessDays: Long = 7L,
-      availableNow: Boolean = true): StreamingQuery = {
-    val w = deltaStream(events, latenessDays).writeStream
-      .queryName("graft_stream_holt_winters")
-      .outputMode("update")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch(applyBatch(store) _)
-    (if (availableNow) w.trigger(Trigger.AvailableNow())
-     else w.trigger(Trigger.ProcessingTime("1 second"))).start()
-  }
+      latenessDays: Long = 7L): StreamingQuery =
+    StreamDriver.start("graft_stream_holt_winters", deltaStream(events, latenessDays),
+      checkpointDir, OutputMode.Update())(applyBatch(store))
 
   /** Everything that has arrived, in the batch `e28_holt_winters`
     * shape. */
   def hwTable(spark: SparkSession, store: ParquetKpiStore): DataFrame =
-    store.readGrouped(spark, group, table)
-      .map(_.select(col("event_type"), col("n_days"), col("level"),
+    store.readGrouped(spark, group, table, schema)
+      .select(col("event_type"), col("n_days"), col("level"),
         col("trend"), col("seasonal_next"), col("forecast_1"))
-        .orderBy(col("event_type")))
-      .getOrElse(spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType.fromDDL(
-          "event_type STRING, n_days BIGINT, level DOUBLE, trend DOUBLE, " +
-            "seasonal_next DOUBLE, forecast_1 DOUBLE")))
+      .orderBy(col("event_type"))
 }

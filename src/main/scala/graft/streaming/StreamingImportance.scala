@@ -4,7 +4,7 @@ import graft.operators.Importance
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Streaming DSIR importance scoring — the ingest-time form of
   * [[graft.operators.Importance]]: the quantized log-ratio table is fit
@@ -59,19 +59,12 @@ class StreamingImportance(
       raw: DataFrame,
       textCol: String,
       docStream: DataFrame,
-      checkpointDir: String,
-      availableNow: Boolean = true): StreamingQuery = {
+      checkpointDir: String): StreamingQuery = {
     val cachedRatios =
       Importance.logRatioTable(target, raw, textCol, hexChars, salt).persist()
-    val w = docStream.writeStream
-      .queryName("graft_stream_importance")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(spark, cachedRatios, batch, batchId)
-        ()
-      }
-    val query = (if (availableNow) w.trigger(Trigger.AvailableNow())
-      else w.trigger(Trigger.ProcessingTime("1 second"))).start()
+    val query = StreamDriver.start("graft_stream_importance", docStream, checkpointDir) {
+      (batch: DataFrame, batchId: Long) => processBatch(spark, cachedRatios, batch, batchId)
+    }
     // lifecycle: the ratio cache lives exactly as long as the query
     val release = new org.apache.spark.sql.streaming.StreamingQueryListener {
       import org.apache.spark.sql.streaming.StreamingQueryListener._

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Streaming daily OHLC candles — batch `e15`'s ingest-time twin: the
   * per-(event_type, day) open/high/low/close panel maintained while
@@ -28,6 +28,8 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 object StreamingOhlc {
 
   private[streaming] val table = "ohlc_daily"
+  private val schema = "day_idx BIGINT, event_type STRING, open_eid BIGINT, open DOUBLE, " +
+    "high DOUBLE, low DOUBLE, close_eid BIGINT, close DOUBLE, n_events BIGINT"
 
   /** Partial OHLC state of one frame — also the state schema. */
   private def partial(df: DataFrame): DataFrame =
@@ -68,33 +70,17 @@ object StreamingOhlc {
       spark: SparkSession,
       stream: DataFrame,
       store: ParquetKpiStore,
-      checkpointDir: String,
-      availableNow: Boolean = true): StreamingQuery = {
-    val w = stream.writeStream
-      .queryName("graft_stream_ohlc")
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        store.mergeWith(batch.sparkSession, table, partial(batch), id)(combine)
-      }
-    (if (availableNow) w.trigger(Trigger.AvailableNow())
-     else w.trigger(Trigger.ProcessingTime("1 second"))).start()
-  }
+      checkpointDir: String): StreamingQuery =
+    StreamDriver.start("graft_stream_ohlc", stream, checkpointDir) { (batch: DataFrame, id: Long) =>
+      store.mergeWith(batch.sparkSession, table, partial(batch), id)(combine)
+    }
 
   /** Everything that has arrived, in the batch `e15_ohlc` shape; a
     * never-written store reads as an empty panel with the full schema
     * (a poll before the first batch is a normal state, not an error). */
   def candleTable(spark: SparkSession, store: ParquetKpiStore): DataFrame =
-    store.read(spark, table) match {
-      case Some(df) =>
-        df.select(col("day_idx"), col("event_type"), col("open"), col("high"),
-            col("low"), col("close"), col("n_events"))
-          .orderBy(col("day_idx"), col("event_type"))
-      case None =>
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          org.apache.spark.sql.types.StructType.fromDDL(
-            "day_idx BIGINT, event_type STRING, open DOUBLE, high DOUBLE, " +
-              "low DOUBLE, close DOUBLE, n_events BIGINT"))
-    }
+    store.read(spark, table, schema)
+      .select(col("day_idx"), col("event_type"), col("open"), col("high"),
+        col("low"), col("close"), col("n_events"))
+      .orderBy(col("day_idx"), col("event_type"))
 }

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 
 /** Streaming twin of the batch cohort-retention query (`w11` —
   * SparkEntry.w11Retention): users cohort by their FIRST active week
@@ -133,16 +133,9 @@ object StreamingRetention {
       spark: SparkSession,
       events: DataFrame,
       store: ParquetKpiStore,
-      checkpointDir: String,
-      availableNow: Boolean = true): StreamingQuery = {
-    val w = deltaStream(events).writeStream
-      .queryName("graft_stream_retention")
-      .outputMode("update")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch(applyBatch(store) _)
-    (if (availableNow) w.trigger(Trigger.AvailableNow())
-     else w.trigger(Trigger.ProcessingTime("1 second"))).start()
-  }
+      checkpointDir: String): StreamingQuery =
+    StreamDriver.start("graft_stream_retention", deltaStream(events), checkpointDir,
+      OutputMode.Update())(applyBatch(store))
 
   /** The retention table in `w11`'s exact output shape, read from the
     * upserted state. Zero-total rows (fully retracted cells/cohorts
@@ -152,10 +145,9 @@ object StreamingRetention {
   def retentionTable(spark: SparkSession, store: ParquetKpiStore): DataFrame = {
     // grouped reads: both tables resolve through the ONE manifest —
     // the cross-table generation consistency mergeGroup guarantees
-    val cells = store.readGrouped(spark, group, cellsTable)
-      .getOrElse(spark.emptyDataFrame)
-    val sizes = store.readGrouped(spark, group, sizesTable)
-      .getOrElse(spark.emptyDataFrame)
+    val cells = store.readGrouped(spark, group, cellsTable,
+      "cohort_wk BIGINT, k BIGINT, n_active BIGINT")
+    val sizes = store.readGrouped(spark, group, sizesTable, "cohort_wk BIGINT, cohort_n BIGINT")
     cells.filter(col("n_active") > 0)
       .join(sizes.filter(col("cohort_n") > 0), Seq("cohort_wk"))
       .select(col("cohort_wk"), col("k").cast("long").as("k"),

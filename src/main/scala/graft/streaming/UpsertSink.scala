@@ -52,6 +52,18 @@ class ParquetKpiStore(root: String) extends Serializable {
   def read(spark: SparkSession, table: String): Option[DataFrame] =
     currentVersionPath(spark, table).map(spark.read.parquet(_))
 
+  /** Current table contents, or no rows of the table's state schema
+    * `ddl` if never written: a read-back polled before the first batch
+    * is a normal state, and its derivation must resolve the same
+    * columns either way. */
+  def read(spark: SparkSession, table: String, ddl: String): DataFrame =
+    read(spark, table).getOrElse(empty(spark, ddl))
+
+  private def empty(spark: SparkSession, ddl: String): DataFrame =
+    spark.createDataFrame(
+      java.util.Collections.emptyList[org.apache.spark.sql.Row](),
+      org.apache.spark.sql.types.StructType.fromDDL(ddl))
+
   /** Additively merge keyed components: non-key numeric columns are summed
     * per key across the existing state and the new batch. Skips batches
     * already applied (replay after checkpoint recovery is a no-op). */
@@ -61,7 +73,7 @@ class ParquetKpiStore(root: String) extends Serializable {
       keys: Seq[String],
       updates: DataFrame,
       batchId: Long): Unit = synchronized {
-    if (batchId <= appliedBatch(spark, table)) return // idempotent replay
+    if (replayed(appliedBatch(spark, table), batchId, Seq(updates))) return
     val valueCols = updates.columns.filterNot(keys.contains)
     val merged = read(spark, table) match {
       case None => updates
@@ -91,7 +103,7 @@ class ParquetKpiStore(root: String) extends Serializable {
       keys: Seq[String],
       updates: DataFrame,
       batchId: Long): Unit = synchronized {
-    if (batchId <= appliedBatch(spark, table)) return // idempotent replay
+    if (replayed(appliedBatch(spark, table), batchId, Seq(updates))) return
     val merged = read(spark, table) match {
       case None => updates
       case Some(cur) =>
@@ -117,12 +129,25 @@ class ParquetKpiStore(root: String) extends Serializable {
       table: String,
       updates: DataFrame,
       batchId: Long)(combine: DataFrame => DataFrame): Unit = synchronized {
-    if (batchId <= appliedBatch(spark, table)) return // idempotent replay
+    if (replayed(appliedBatch(spark, table), batchId, Seq(updates))) return
     val merged = read(spark, table) match {
       case None => updates
       case Some(cur) => combine(cur.unionByName(updates))
     }
     writeVersion(spark, table, merged, batchId)
+  }
+
+  /** The idempotence check every merge starts with: true when
+    * `batchId` is at or below the `applied` watermark, i.e. Spark is
+    * re-running a batch whose effects are already in the store. The
+    * replayed batch's `updates` still run once, rows discarded:
+    * stateful operators upstream commit their state per batch id, and
+    * Spark refuses to commit a stateful micro-batch whose state stores
+    * did not (STATE_STORE_COMMIT_VALIDATION_FAILED). */
+  private def replayed(applied: Long, batchId: Long, updates: Seq[DataFrame]): Boolean = {
+    val skip = batchId <= applied
+    if (skip) updates.foreach(_.write.format("noop").mode(SaveMode.Overwrite).save())
+    skip
   }
 
   /** Shared version-write tail: new version dir, atomic pointer swap,
@@ -175,6 +200,11 @@ class ParquetKpiStore(root: String) extends Serializable {
     }
   }
 
+  /** [[readGrouped]] with [[read]]'s never-written fallback: no rows
+    * of the member's state schema `ddl`. */
+  def readGrouped(spark: SparkSession, group: String, table: String, ddl: String): DataFrame =
+    readGrouped(spark, group, table).getOrElse(empty(spark, ddl))
+
   /** Atomic multi-table additive merge: every `(table, keys, updates)`
     * member folds like [[merge]], but versions land as uncommitted
     * `v_batchId` dirs first and ONE manifest swap
@@ -190,7 +220,7 @@ class ParquetKpiStore(root: String) extends Serializable {
       members: Seq[(String, Seq[String], DataFrame)],
       batchId: Long): Unit = synchronized {
     require(members.nonEmpty, "mergeGroup needs at least one member table")
-    if (batchId <= appliedGroupBatch(spark, group)) return // idempotent replay
+    if (replayed(appliedGroupBatch(spark, group), batchId, members.map(_._3))) return
     members.foreach { case (table, keys, updates) =>
       val valueCols = updates.columns.filterNot(keys.contains)
       val merged = readGrouped(spark, group, table) match {
@@ -231,7 +261,7 @@ class ParquetKpiStore(root: String) extends Serializable {
       members: Seq[(String, DataFrame)],
       batchId: Long): Unit = synchronized {
     require(members.nonEmpty, "commitGroup needs at least one member table")
-    if (batchId <= appliedGroupBatch(spark, group)) return // idempotent replay
+    if (replayed(appliedGroupBatch(spark, group), batchId, members.map(_._2))) return
     members.foreach { case (table, next) =>
       next.write.mode(SaveMode.Overwrite)
         .parquet(s"${tableDir(table)}/v_$batchId")
